@@ -10,6 +10,7 @@ over the 1-row result.
 from __future__ import annotations
 
 import json
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Row
@@ -27,11 +28,16 @@ class QualityThresholds:
     min_records: int = 5
 
 
-def quality_metrics(df: DataFrame, total_input: int) -> Row:
+def quality_metrics(
+    df: DataFrame, total_input: int | Callable[[int], int]
+) -> Row:
     """A1 — global quality aggregate in one job.
 
     Null counting sums ``isNull`` casts per column inside the same
     aggregate (the reference's ``isnull().sum().sum()``), so no extra pass.
+    ``total_input`` may be a callable taking the output row count, read
+    after the aggregate ran — for an input count observed by that same
+    action.
     """
     null_cols = [c for c in RAW_COLUMNS if c in df.columns]
     null_total = sum(
@@ -51,6 +57,8 @@ def quality_metrics(df: DataFrame, total_input: int) -> Row:
         F.max("timestamp").alias("timestamp_max"),
     ).first()
     n_out = row["total_records_output"]
+    if callable(total_input):
+        total_input = total_input(n_out)
     n_cells = max(n_out * len(null_cols), 1)
     return Row(
         total_records_input=total_input,

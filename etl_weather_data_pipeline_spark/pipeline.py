@@ -14,7 +14,8 @@ disappear.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from etl_weather_data_pipeline_spark.operators.quality import (
     QualityThresholds,
@@ -48,10 +49,25 @@ def run_pipeline(
     metrics_path = f"{warehouse_dir}/data_quality_metrics"
     history_path = f"{warehouse_dir}/load_history"
 
-    total_input = raw.count()
-    enriched = transform_weather(raw).cache()
+    # The input count rides the first action on `enriched` (the quality
+    # aggregate, which builds its cache) instead of a separate scan.
+    # The median branch of handle_missing reads the same upstream again;
+    # both copies of the observation see every raw row and report under
+    # one name, so the count is not doubled.
+    raw_obs = Observation()
+    enriched = transform_weather(
+        raw.observe(raw_obs, F.count(F.lit(1)).alias("n"))
+    ).cache()
+
+    def observed_input(n_out: int) -> int:
+        # AQE replaces the scan of an EMPTY cached relation with an empty
+        # local relation, so the observation inside it is never reported;
+        # a batch with no surviving rows is counted directly instead.
+        return raw_obs.get["n"] if n_out else raw.count()
+
     try:
-        metrics = quality_metrics(enriched, total_input)
+        metrics = quality_metrics(enriched, observed_input)
+        total_input = metrics["total_records_input"]
         try:
             with Stopwatch() as sw:
                 counts = merge_upsert(spark, enriched, weather_path)

@@ -9,9 +9,12 @@ Upsert (K6): the reference does a per-row INSERT..ON CONFLICT loop
 (src/load.py:386-426) — O(n) round-trips. Here it is ONE set-based merge.
 Without Delta on the classpath the merge is emulated as
 anti-join + union + staged write + per-partition directory rename: only
-the partitions containing updated keys are read or rewritten, and the old
-data is never deleted before its replacement is durably written. With
-Delta available, ``merge_upsert`` dispatches to a real MERGE INTO.
+the partitions the batch touches are read or rewritten, and the old
+data is never deleted before its replacement is durably written. Each
+touched partition is rewritten as one file (AQE splits a partition
+larger than the advisory partition size), and the inserted/updated
+counts come from observations on that write, not from extra actions.
+With Delta available, ``merge_upsert`` dispatches to a real MERGE INTO.
 Semantics: whole-row update on key match (SURVEY §7.3 item 4).
 """
 
@@ -21,8 +24,9 @@ import time
 from collections.abc import Sequence
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from etl_weather_data_pipeline_spark.schemas import (
     LOAD_HISTORY_SCHEMA,
@@ -413,10 +417,23 @@ def merge_upsert(
     write streams straight from the live files — the old data is never
     deleted before its replacement is durably on disk.
 
+    Layout: both writes (fresh table and staged rewrite) carry a
+    ``rebalance`` hint on the partition columns, so AQE writes ONE file
+    per touched partition and splits a partition larger than
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` into several —
+    the same bytes-based sizing as :func:`compact_parquet`. Re-touching
+    a partition therefore replaces its files instead of adding to them.
+
+    Actions: one batch aggregate (the contract check below, the batch
+    row count and the distinct partition values) plus the write. The
+    counts ride that write: observations on the touched rows and on the
+    rows surviving the key anti-join give updated = touched − kept, and
+    inserted = batch rows − updated.
+
     Contract: every partition column must be functionally dependent on the
     merge key (here date = date(timestamp), timestamp ∈ keys), so a key
     collision can never hide in an untouched partition. The batch side of
-    the contract is CHECKED (one batch-proportional agg, enforced on the
+    the contract is CHECKED (by the batch aggregate, enforced on the
     fresh-table path too — the first batch must not seed key-violating
     rows): no two batch rows may share a key, no merge key may be NULL
     (SQL MERGE parity — an ON clause never matches NULL, so a NULL-keyed
@@ -468,37 +485,58 @@ def merge_upsert(
                 "converge)",
                 stacklevel=2,
             )
-        # Batch contract check — ONE batch-proportional agg covering both
-        # invariants, enforced before the fresh-table branch too (the
-        # first batch must not seed the table with key-violating rows).
+        # Batch contract + everything else the merge needs from the
+        # batch, in ONE batch-proportional action (enforced before the
+        # fresh-table branch too — the first batch must not seed the
+        # table with key-violating rows): the largest per-key group
+        # (duplicate keys), a NULL-key flag, the row count (the
+        # inserted/updated split) and the distinct partition values
+        # (the touched-partition semi-join and the append guard's
+        # dirs). Per key the partition struct is taken from any row:
+        # a batch where it could differ has a duplicate key and raises.
         any_null_key = None
         for k in keys:
             c = F.col(k).isNull()
             any_null_key = c if any_null_key is None else (any_null_key | c)
-        contract = (
+        per_key = [F.count(F.lit(1)).alias("__n")]
+        if parts:
+            per_key.append(F.first(F.struct(*parts)).alias("__part"))
+        stats = (
             df.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("__n"))
+            .agg(*per_key)
             .agg(
                 F.max("__n").alias("max_dup"),
                 F.max(any_null_key.cast("int")).alias("has_null_key"),
+                F.coalesce(F.sum("__n"), F.lit(0)).alias("n_rows"),
+                (
+                    F.collect_set("__part") if parts else F.lit(None)
+                ).alias("parts"),
             )
             .first()
         )
-        if contract["has_null_key"]:
+        if stats["has_null_key"]:
             raise ValueError(
                 f"merge_upsert batch contains NULL in merge keys {keys}; "
                 "a NULL key never equality-matches (SQL MERGE semantics), "
                 "so the row would be re-inserted on every run — drop or "
                 "repair such rows first"
             )
-        if (contract["max_dup"] or 0) > 1:
+        if (stats["max_dup"] or 0) > 1:
             raise ValueError(
                 f"merge_upsert batch contains duplicate rows for keys {keys}; "
                 "dedup the batch first (last-write-wins is ambiguous here)"
             )
+        n_rows = stats["n_rows"]
+        # Both writes rebalance on the partition columns: one file per
+        # touched partition, AQE-split when large (docstring, Layout).
+        # Without it every task writes a file into every partition it
+        # holds rows of.
         if not os.path.exists(path):
-            write_parquet(df, path, "overwrite", parts)
-            return {"inserted": df.count(), "updated": 0}
+            write_parquet(df.hint("rebalance", *parts), path, "overwrite", parts)
+            return {"inserted": n_rows, "updated": 0}
+        if not n_rows:
+            # nothing to merge; the table is already the merge result
+            return {"inserted": 0, "updated": 0}
         # Concurrent-append guard snapshot (r14, same class as the
         # compaction's): taken BEFORE the `existing` read pins its own
         # listing, diffed just before the swap — files another writer
@@ -506,14 +544,13 @@ def merge_upsert(
         # otherwise ride the partition dir into the trash and be
         # removed with it. Only TOUCHED partitions ever swap, so for a
         # partitioned table both the snapshot and the diff walk only the
-        # batch's partition dirs (one extra batch-proportional collect
-        # derives them) — a full recursive glob here would be an
-        # O(all table files) single-threaded driver walk per upsert,
-        # breaking the proportional-to-the-BATCH contract at 100 TB.
+        # batch's partition dirs (derived from the stats row above) — a
+        # full recursive glob here would be an O(all table files)
+        # single-threaded driver walk per upsert, breaking the
+        # proportional-to-the-BATCH contract at 100 TB.
         guard_dirs = None
         if parts:
-            batch_parts = df.select(*parts).distinct()
-            guard_dirs = _hive_rel_dirs(parts, batch_parts.collect())
+            guard_dirs = _hive_rel_dirs(parts, stats["parts"])
         before_files = _list_parquet_files(path, guard_dirs)
         existing = spark.read.parquet(path)
         if parts:
@@ -522,6 +559,9 @@ def merge_upsert(
             # plain equality would exclude the existing
             # __HIVE_DEFAULT_PARTITION__ rows from `kept` while the swap
             # still replaces that directory, silently destroying them.
+            batch_parts = spark.createDataFrame(
+                stats["parts"], df.select(*parts).schema
+            )
             existing = existing.join(
                 F.broadcast(batch_parts),
                 [
@@ -530,19 +570,26 @@ def merge_upsert(
                 ],
                 "left_semi",
             )
-        batch_keys = df.select(*keys).distinct()
-        updated = (
-            existing.join(F.broadcast(batch_keys), keys, "left_semi").count()
-        )
-        kept = existing.join(F.broadcast(batch_keys), keys, "left_anti")
+        # The inserted/updated split rides the staged write: two
+        # observations count the touched rows and the rows that survive
+        # the key anti-join, so updated = touched - kept with no extra
+        # action. Batch keys are unique (contract above), so the anti-
+        # join's broadcast side needs no distinct.
+        touched_obs, kept_obs = Observation(), Observation()
+        n = F.count(F.lit(1)).alias("n")
+        existing = existing.observe(touched_obs, n)
+        kept = existing.join(
+            F.broadcast(df.select(*keys)), keys, "left_anti"
+        ).observe(kept_obs, n)
         out = kept.select(*existing.columns).unionByName(
             df.select(*existing.columns)
         )
-        inserted = df.count() - updated
         staged = path.rstrip("/") + f".upsert-tmp-{uuid.uuid4().hex[:8]}"
         # The staged write streams from the live files — they are only
         # replaced after the new data is durably on disk.
-        write_parquet(out, staged, "overwrite", parts)
+        write_parquet(out.hint("rebalance", *parts), staged, "overwrite", parts)
+        updated = touched_obs.get["n"] - kept_obs.get["n"]
+        inserted = n_rows - updated
 
         def _abort_on_late(late: list[str]) -> None:
             # Same semantics as compact_parquet's guard: an upsert has
@@ -852,17 +899,37 @@ def export_training_shards(
     return manifest
 
 
+def _append_row(
+    spark: SparkSession, schema: StructType, values: Sequence, path: str
+) -> None:
+    """Append ONE row to a parquet table as ONE file. The row is a
+    literal projection over a single-partition range: a one-row
+    ``createDataFrame`` list spreads over every default slice, and the
+    writer then leaves an empty file for slice 0 beside the row's own.
+    The casts are one SQL select, not a ``Column.cast`` per field, which
+    would cost ~20 py4j round trips per field."""
+    spark.range(0, 1, 1, 1).select(*[F.lit(v) for v in values]).toDF(
+        *schema.names
+    ).selectExpr(
+        *[
+            f"CAST(`{f.name}` AS {f.dataType.simpleString()}) AS `{f.name}`"
+            for f in schema.fields
+        ]
+    ).write.mode("append").parquet(path)
+
+
 def append_quality_metrics(
     spark: SparkSession, metrics_row: dict, path: str
 ) -> None:
     """K7 — append one row to the data_quality_metrics table."""
     row = dict(metrics_row)
     row.setdefault("load_timestamp", datetime.now(timezone.utc).replace(tzinfo=None))
-    fields = [f.name for f in QUALITY_METRICS_SCHEMA.fields]
-    df = spark.createDataFrame(
-        [tuple(row.get(f) for f in fields)], QUALITY_METRICS_SCHEMA
+    _append_row(
+        spark,
+        QUALITY_METRICS_SCHEMA,
+        [row.get(f.name) for f in QUALITY_METRICS_SCHEMA.fields],
+        path,
     )
-    df.write.mode("append").parquet(path)
 
 
 def append_load_history(
@@ -878,22 +945,21 @@ def append_load_history(
 ) -> None:
     """K8 — append one row to load_history (written even on failure,
     reference src/load.py:526-554)."""
-    df = spark.createDataFrame(
-        [
-            (
-                records_loaded,
-                records_updated,
-                records_failed,
-                duration_s,
-                status,
-                error_message,
-                source_info,
-                datetime.now(timezone.utc).replace(tzinfo=None),
-            )
-        ],
+    _append_row(
+        spark,
         LOAD_HISTORY_SCHEMA,
+        [
+            records_loaded,
+            records_updated,
+            records_failed,
+            duration_s,
+            status,
+            error_message,
+            source_info,
+            datetime.now(timezone.utc).replace(tzinfo=None),
+        ],
+        path,
     )
-    df.write.mode("append").parquet(path)
 
 
 class Stopwatch:

@@ -736,6 +736,23 @@ def _append_ingest_history(
     )
 
 
+def _persist_into(
+    df: DataFrame, persists: list[DataFrame] | None
+) -> DataFrame:
+    """Persist ``df`` into the caller-owned cleanup list, registered as
+    it is created — an exception between persist and return would
+    otherwise leak a cached plan per retried batch (the caller only
+    learns about a stage's persists from the return value). With no
+    list there is no owner to release the cache, so ``df`` stays
+    unpersisted: the stage's lazy outputs then recompute it per
+    consumer, which costs time but never leaks."""
+    if persists is None:
+        return df
+    df = df.persist()
+    persists.append(df)
+    return df
+
+
 def _passage_stage_drops(
     spark: SparkSession,
     s2: DataFrame,
@@ -796,14 +813,7 @@ def _passage_stage_drops(
     )
 
     def _p(df: DataFrame) -> DataFrame:
-        # register persists with the CALLER's cleanup list as they are
-        # created — an exception between persist and return would
-        # otherwise leak a cached plan per retried batch (the caller
-        # only learns about our persists from the return value)
-        df = df.persist()
-        if persists is not None:
-            persists.append(df)
-        return df
+        return _persist_into(df, persists)
 
     rh_batch = _p(rolling_hashes(s2, k, id_col, text_col))
     bfps = _p(
@@ -1095,9 +1105,7 @@ def _semantic_stage_drops(
     # dominant map cost) per branch. Batch-bounded rows; registered
     # with the caller's cleanup list (the count action right below
     # materializes the cache before any join consumes it).
-    asg = asg.persist()
-    if persists is not None:
-        persists.append(asg)
+    asg = _persist_into(asg, persists)
     # ONE per-cell count action serves both the stop bound and the
     # store probe's occupied-cell list (it replaces the old
     # distinct().collect() — no extra job, no window shuffle; the

@@ -17,7 +17,7 @@ from etl_weather_data_pipeline_spark.operators.quality import (
 from etl_weather_data_pipeline_spark.pipeline import run_pipeline
 from etl_weather_data_pipeline_spark.plans import views
 from etl_weather_data_pipeline_spark.schemas import RAW_SCHEMA
-from etl_weather_data_pipeline_spark.sinks.writers import merge_upsert
+from etl_weather_data_pipeline_spark.sinks.writers import UPSERT_KEYS, merge_upsert
 from etl_weather_data_pipeline_spark.transform import transform_weather
 
 
@@ -90,17 +90,25 @@ def test_upsert_rewrites_only_touched_partitions(spark, batch, tmp_path):
     two_days = batch.union(
         spark.createDataFrame([_obs("London", "GB", 1, 10.0, day=8)], RAW_SCHEMA)
     )
+    def files(day):
+        return sorted(
+            glob.glob(f"{wh}/weather_data/date=2023-11-{day:02d}/*.parquet")
+        )
+
     merge_upsert(spark, transform_weather(two_days), f"{wh}/weather_data")
-    day7_files = sorted(glob.glob(f"{wh}/weather_data/date=2023-11-07/*.parquet"))
-    assert day7_files
+    # one file per partition on the fresh-table write too
+    assert len(files(7)) == 1 and len(files(8)) == 1
+    day7_files = files(7)
     mtimes = {p: os.path.getmtime(p) for p in day7_files}
 
     # Same key as the day-8 row, bumped temperature -> update, day 8 only.
     bump = spark.createDataFrame([_obs("London", "GB", 1, 11.0, day=8)], RAW_SCHEMA)
     counts = merge_upsert(spark, transform_weather(bump), f"{wh}/weather_data")
     assert counts == {"inserted": 0, "updated": 1}
+    # a re-touched partition is REPLACED by one file, not grown
+    assert len(files(8)) == 1
 
-    after = sorted(glob.glob(f"{wh}/weather_data/date=2023-11-07/*.parquet"))
+    after = files(7)
     assert after == day7_files
     assert all(os.path.getmtime(p) == mtimes[p] for p in day7_files)
     stored = spark.read.parquet(f"{wh}/weather_data")
@@ -108,6 +116,159 @@ def test_upsert_rewrites_only_touched_partitions(spark, batch, tmp_path):
     assert (
         stored.filter(F.col("date") == "2023-11-08").first()["temperature"] == 11.0
     )  # the updated row won
+
+
+def _semi_join_counts(spark, batch, path, keys, parts):
+    """The upsert's {inserted, updated}, counted the explicit way: batch
+    keys that already exist in the partitions the batch touches."""
+    table = spark.read.parquet(path)
+    batch_parts = batch.select(*parts).distinct()
+    touched = table.join(
+        batch_parts,
+        [table[c].eqNullSafe(batch_parts[c]) for c in parts],
+        "left_semi",
+    )
+    updated = touched.join(batch.select(*keys), list(keys), "left_semi").count()
+    return {"inserted": batch.count() - updated, "updated": updated}
+
+
+@pytest.mark.parametrize(
+    "case", ["weather", "null_partition", "new_partitions", "empty"]
+)
+def test_upsert_counts_match_explicit_semi_join(spark, batch, tmp_path, case):
+    """The inserted/updated split observed on the staged write equals an
+    explicit semi-join count, on a batch that re-delivers existing keys
+    next to new ones — including a re-delivered key whose partition
+    value is NULL (the __HIVE_DEFAULT_PARTITION__ dir) — on a batch that
+    touches no existing partition (the observed frames are empty), and
+    on an empty batch, which must leave the table's files alone."""
+    import glob
+    import os
+
+    p = str(tmp_path / "t")
+    keys, parts = UPSERT_KEYS, ("date",)
+    if case == "null_partition":
+        keys, parts = ("id",), ("shard",)
+        schema = "id long, v string, shard string"
+        base = spark.createDataFrame(
+            [(1, "a", "s0"), (2, "b", None), (3, "c", None), (4, "d", "s1")],
+            schema,
+        )
+        merge_upsert(spark, base, p, keys=keys, partition_by=parts)
+        nxt = spark.createDataFrame(
+            [(2, "b2", None), (4, "d2", "s1"), (5, "e", None), (6, "f", "s2")],
+            schema,
+        )
+        want = {"inserted": 2, "updated": 2}
+    else:
+        merge_upsert(spark, transform_weather(batch), p)
+        rows, want = {
+            "weather": (
+                [
+                    _obs("London", "GB", 1, 30.0),  # existing keys, new values
+                    _obs("Tokyo", "JP", 2, 30.0),
+                    _obs("Paris", "FR", 5, 30.0),  # new hour, same day
+                    _obs("Paris", "FR", 1, 30.0, day=8),  # new day
+                ],
+                {"inserted": 2, "updated": 2},
+            ),
+            "new_partitions": (
+                [_obs("London", "GB", h, 9.0, day=9) for h in range(4)],
+                {"inserted": 4, "updated": 0},
+            ),
+            "empty": ([], {"inserted": 0, "updated": 0}),
+        }[case]
+        nxt = transform_weather(
+            spark.createDataFrame(rows, RAW_SCHEMA)
+        ).localCheckpoint()
+    assert _semi_join_counts(spark, nxt, p, keys, parts) == want
+    mtimes = {f: os.path.getmtime(f) for f in glob.glob(f"{p}/*/*.parquet")}
+    assert merge_upsert(spark, nxt, p, keys=keys, partition_by=parts) == want
+    if case == "empty":
+        after = {f: os.path.getmtime(f) for f in glob.glob(f"{p}/*/*.parquet")}
+        assert after == mtimes
+    if case == "null_partition":
+        stored = {r["id"]: (r["v"], r["shard"]) for r in spark.read.parquet(p).collect()}
+        assert stored == {
+            1: ("a", "s0"), 2: ("b2", None), 3: ("c", None),
+            4: ("d2", "s1"), 5: ("e", None), 6: ("f", "s2"),
+        }
+
+
+def test_upsert_into_existing_table_job_count(spark, batch, tmp_path):
+    """Job-count pin for one upsert into an existing partitioned table:
+    one batch aggregate (contract, row count, partition values), the
+    table's schema read, the batch-key broadcast and the rebalanced
+    staged write, with the counts observed on that write. The shape
+    with a separate contract action, partition-value collect, updated
+    semi-join count and batch count ran 19 jobs here."""
+    p = str(tmp_path / "t")
+    merge_upsert(spark, transform_weather(batch), p)
+    nxt = transform_weather(
+        spark.createDataFrame(
+            [_obs("London", "GB", 1, 30.0), _obs("Paris", "FR", 1, 30.0, day=8)],
+            RAW_SCHEMA,
+        )
+    ).localCheckpoint()
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = sched.nextJobId()
+    assert merge_upsert(spark, nxt, p) == {"inserted": 1, "updated": 1}
+    assert sched.nextJobId() - j0 == 8
+
+
+def test_run_pipeline_input_count_observed_once(spark, tmp_path):
+    """total_records_input is observed on `raw` while the cached
+    `enriched` is built; it must equal the parsed payload count on a
+    landed file with corrupt lines (never rows) and within-hour
+    re-fetches (rows, later deduplicated). The median-fill branch of
+    handle_missing reads the same upstream a second time, so the
+    observation sits twice in the plan; the count must not double."""
+    import json
+
+    from etl_weather_data_pipeline_spark.sources.readers import read_api_json
+
+    def payload(city, cc, ts, temp):
+        return json.dumps({
+            "coord": {"lon": -0.1, "lat": 51.5},
+            "weather": [{"description": "ok"}],
+            "main": {"temp": temp, "feels_like": temp - 1.0,
+                     "pressure": 1013, "humidity": 60},
+            "visibility": 10000,
+            "wind": {"speed": 3.0, "deg": 180},
+            "clouds": {"all": 40},
+            "dt": int(ts.replace(tzinfo=dt.timezone.utc).timestamp()),
+            "sys": {"country": cc},
+            "name": city,
+        })
+
+    t0 = dt.datetime(2023, 11, 7, 6, 0)
+    lines = [
+        payload(f"City{i}", "GB", t0 + dt.timedelta(hours=h), 10.0 + i)
+        for i in range(8)
+        for h in range(2)
+    ]
+    lines += [  # within-hour re-fetches of two readings
+        payload("City0", "GB", t0 + dt.timedelta(minutes=20), 10.5),
+        payload("City1", "GB", t0 + dt.timedelta(minutes=40), 11.5),
+    ]
+    lines += ['{"name": "Broken", "main": {', "not json at all"]
+    landed = tmp_path / "landed.json"
+    landed.write_text("\n".join(lines))
+    raw = read_api_json(spark, str(landed))
+    m = run_pipeline(spark, raw, str(tmp_path / "wh"))
+    assert m["total_records_input"] == raw.count() == 18
+    assert m["total_records_output"] == 16
+    hist = spark.read.parquet(str(tmp_path / "wh" / "load_history")).collect()
+    assert [(r["records_loaded"], r["status"]) for r in hist] == [(16, "success")]
+
+    # No surviving row: AQE drops the empty cached scan, and with it the
+    # observation — the input must still be counted, not lost.
+    invalid = [_obs("A", "AA", 0, 999.0), _obs("B", "BB", 0, -999.0)]
+    wh = str(tmp_path / "wh_invalid")
+    with pytest.raises(ValueError, match="quality gate failed"):
+        run_pipeline(spark, spark.createDataFrame(invalid, RAW_SCHEMA), wh)
+    m = spark.read.parquet(f"{wh}/data_quality_metrics").first()
+    assert (m["total_records_input"], m["total_records_output"]) == (2, 0)
 
 
 def test_delta_merge_builder_contract(spark, batch, tmp_path, monkeypatch):

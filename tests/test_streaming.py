@@ -1708,6 +1708,38 @@ def test_ivf_index_compaction_and_coverage_audit(spark, tmp_path):
     ).isEmpty()
 
 
+def test_semantic_stage_direct_call_leaves_no_cache(spark, tmp_path):
+    """Called with no cleanup list, stage 4 has no owner to release its
+    per-cell assignment, so it must not persist it: no cached RDD may
+    outlive a direct call (it used to leak one per call for the session
+    lifetime). Its output stays correct lazily."""
+    from etl_weather_data_pipeline_spark.streaming.corpus import (
+        _semantic_stage_drops,
+    )
+
+    def persistent_ids() -> set[int]:
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in jmap.keySet().toArray()}
+
+    v = [1.0, 2.0, 3.0, 4.0]
+    s3 = spark.createDataFrame(
+        [
+            (0, v),
+            (1, [x * 1.001 for x in v]),  # near-dup of doc 0
+            (2, [4.0, -3.0, 2.0, -1.0]),
+        ],
+        "doc_id long, embedding array<double>",
+    )
+    before = persistent_ids()
+    sdrop, _ = _semantic_stage_drops(
+        spark, s3, str(tmp_path / "corpus"), "doc_id", "embedding",
+        threshold=0.95, n_cells=2, iterations=1,
+        bootstrap_centroids=[v, [4.0, -3.0, 2.0, -1.0]],
+    )
+    assert [r["doc_id"] for r in sdrop.collect()] == [1]
+    assert persistent_ids() - before == set()
+
+
 def test_semantic_stage_lenient_on_bad_vectors(spark, tmp_path):
     """r10 advice: a row whose embedding is null / mis-sized / contains
     a null element must NOT wedge the merge via assign_cells' in-plan
