@@ -27,6 +27,11 @@ full re-curation.
 At 100 TB-a-day ingest the only stream state is the fingerprint dedup
 map bounded by the watermark horizon; the dedup history lives in the
 store itself (fingerprint + band projections), probed per batch.
+
+Every file a corpus store lands — documents, ``_bands``, ``_winnow``,
+``_ingest_history`` — is parquet compressed with ``STORE_CODEC`` (zstd),
+set per write through :func:`_store_codec`; the session default (snappy)
+stays for everything else, the weather warehouse included.
 """
 
 from __future__ import annotations
@@ -42,6 +47,24 @@ DOC_STREAM_SCHEMA = (
     "doc_id long, text string, lang string, source string, "
     "ingest_ts timestamp"
 )
+
+#: Parquet codec of every corpus-store write. The store's bulk is its
+#: similarity-join indexes (``_winnow`` alone is ~60% of the bytes),
+#: narrow integer/string key columns on which zstd writes about a third
+#: fewer bytes than snappy, at no measured merge-time cost. Set per write,
+#: never session-wide, so the weather warehouse keeps the session codec.
+#: Reads need nothing: the codec is recorded per column chunk, so a store
+#: holding older snappy files reads (and probes) them alongside.
+STORE_CODEC = "zstd"
+
+
+def _store_codec(writer):
+    """``writer`` (a batch or streaming parquet writer) set to write
+    ``STORE_CODEC``. An append into an existing catalog table writes
+    with the table's options and ignores the writer's, so the bucketed
+    side tables also carry the codec as a table option
+    (:func:`_create_side_table`)."""
+    return writer.option("compression", STORE_CODEC)
 
 
 def stream_docs(spark: SparkSession, landing_dir: str) -> DataFrame:
@@ -91,7 +114,7 @@ def start_corpus_append_sink(
     checkpoint; the periodic batch `corpus_curation_pipeline` +
     `compact_parquet` pass owns global dedup and file sizing."""
     return (
-        curated.writeStream.format("parquet")
+        _store_codec(curated.writeStream.format("parquet"))
         .option("path", path)
         .option("checkpointLocation", checkpoint_dir)
         .partitionBy(*partition_by)
@@ -174,7 +197,7 @@ def merge_batch_into_corpus(
         batch.unpersist()
     n = out.count()
     if n:
-        writer = out.write.mode("append")
+        writer = _store_codec(out.write.mode("append"))
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
@@ -318,9 +341,12 @@ def _create_side_table(
     spark: SparkSession, name: str, loc: str, spec: _SideSpec,
     n_buckets: int,
 ) -> None:
+    # the codec as a table option: appends into the table ignore their
+    # own writer options (see _store_codec)
     spark.sql(
         f"CREATE TABLE IF NOT EXISTS {name} ({spec.ddl}) "
-        f"USING PARQUET CLUSTERED BY ({', '.join(spec.bucket_cols)}) "
+        f"USING PARQUET OPTIONS (compression '{STORE_CODEC}') "
+        f"CLUSTERED BY ({', '.join(spec.bucket_cols)}) "
         f"INTO {n_buckets} BUCKETS LOCATION '{loc}'"
     )
     _write_bucket_marker(loc, n_buckets)
@@ -334,9 +360,12 @@ def _append_side_bucketed(
     (same Murmur3), so each append writes at most ``n_buckets`` files
     instead of tasks x buckets."""
     (
-        rows.select(*spec.cols)
-        .repartition(n_buckets, *[F.col(c) for c in spec.bucket_cols])
-        .write.mode("append")
+        _store_codec(
+            rows.select(*spec.cols)
+            .repartition(n_buckets, *[F.col(c) for c in spec.bucket_cols])
+            .write
+        )
+        .mode("append")
         .format("parquet")
         .bucketBy(n_buckets, *spec.bucket_cols)
         .option("path", loc)
@@ -384,9 +413,12 @@ def _rewrite_side_bucketed(
     tmp_name = name + "__staged"
     spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
     (
-        rows.select(*spec.cols)
-        .repartition(n_buckets, *[F.col(c) for c in spec.bucket_cols])
-        .write.mode("overwrite")
+        _store_codec(
+            rows.select(*spec.cols)
+            .repartition(n_buckets, *[F.col(c) for c in spec.bucket_cols])
+            .write
+        )
+        .mode("overwrite")
         .format("parquet")
         .bucketBy(n_buckets, *spec.bucket_cols)
         .option("path", staged)
@@ -731,7 +763,7 @@ def _append_ingest_history(
         .cast("timestamp")
         .alias("merged_at"),
     )
-    hist.coalesce(1).write.mode("append").parquet(
+    _store_codec(hist.coalesce(1).write.mode("append")).parquet(
         f"{path}/{INGEST_HISTORY_SUBDIR}"
     )
 
@@ -1266,7 +1298,10 @@ def merge_batch_neardup_into_corpus(
        while the periodic pass retrains on the full corpus;
     5. survivors append to the store, their band rows to ``_bands``
        (with stage 3 on, fingerprint rows to ``_winnow``; with stage 4
-       on, their vectors to the ``_vectors_ivf`` index).
+       on, their vectors to the ``_vectors_ivf`` index). The store,
+       ``_bands``, ``_winnow`` and the ``_ingest_history`` row are
+       written zstd (``STORE_CODEC``), whatever the session codec;
+       every store-reading cache is released before the first write.
 
     Scale: the store-side work is two column-pruned probes (fingerprint
     keys; band keys) plus a semi-joined text lookup for verify
@@ -1317,6 +1352,12 @@ def merge_batch_neardup_into_corpus(
     bt = None
     fresh = None
     extra_persists: list[DataFrame] = []
+
+    def _release():
+        for cached in (bt, batch_cached, fresh, *extra_persists):
+            if cached is not None:
+                cached.unpersist()
+
     try:
         rn = F.row_number().over(
             Window.partitionBy("fingerprint").orderBy(F.col(id_col))
@@ -1558,12 +1599,10 @@ def merge_batch_neardup_into_corpus(
             # the write command — with fresh/bt still cached, the
             # store append was re-running the probe chains per write
             # (measured r8: steady-state survivors write 5.8s vs the
-            # bootstrap's 0.9s). The finally below re-unpersists
-            # harmlessly (idempotent).
-            for cached in (bt, *extra_persists):
-                if cached is not None:
-                    cached.unpersist()
-            fresh.unpersist()
+            # bootstrap's 0.9s). That includes batch_cached, whose
+            # stage-1 hit join scans the store. The finally below
+            # re-unpersists harmlessly (idempotent).
+            _release()
             # vectors live in the _vectors_ivf side index only — the
             # main store's schema stays identical whether the semantic
             # stage is on or off (appends must never fork the schema)
@@ -1571,7 +1610,7 @@ def merge_batch_neardup_into_corpus(
                 out.drop(embedding_col) if embedding_col is not None
                 else out
             )
-            writer = doc_out.write.mode("append")
+            writer = _store_codec(doc_out.write.mode("append"))
             if partition_by:
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(path)
@@ -1642,9 +1681,7 @@ def merge_batch_neardup_into_corpus(
         # cached plan per failed batch for the session's lifetime.
         # (survivors/s2 are eager checkpoints now, not persists — their
         # blocks release when the micro-batch's RDDs are GC'd.)
-        for cached in (bt, batch_cached, fresh, *extra_persists):
-            if cached is not None:
-                cached.unpersist()
+        _release()
     if history:
         _append_ingest_history(
             spark, path, n_batch, n_batch - n_after_exact,

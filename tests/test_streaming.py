@@ -364,6 +364,7 @@ def test_streaming_corpus_curation(spark, tmp_path):
 
     langs = {p.split("=")[-1] for p in _glob.glob(f"{out}/lang=*")}
     assert langs == {"en", "de"}
+    assert set(_parquet_codecs(str(out)).values()) == {"ZSTD"}
 
 
 def test_corpus_merge_sink_full_history_dedup(spark, tmp_path):
@@ -418,6 +419,10 @@ def test_corpus_merge_sink_full_history_dedup(spark, tmp_path):
     ).start()
     q.processAllAvailable(); q.stop()
     assert spark.read.parquet(store).count() == 7
+    # documents and audit rows alike are written in the store codec
+    codecs = _parquet_codecs(store)
+    assert any(f.startswith("_ingest_history") for f in codecs)
+    assert set(codecs.values()) == {"ZSTD"}, codecs
 
 
 def test_merge_batch_drops_null_fingerprints(spark, tmp_path):
@@ -1069,6 +1074,27 @@ def test_neardup_sink_inline_compaction(spark, tmp_path):
 
 def _words(prefix, n):
     return " ".join(f"{prefix}{i}" for i in range(n))
+
+
+def _parquet_codecs(root: str, sub: str = "**") -> dict[str, str]:
+    """{path relative to ``root``: codec} for every parquet file under
+    ``root/sub``, read from the footers; a file whose column chunks mix
+    codecs maps to the sorted, comma-joined set."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    out = {}
+    for f in glob.glob(os.path.join(root, sub, "*.parquet"), recursive=True):
+        md = pq.ParquetFile(f).metadata
+        codecs = {
+            md.row_group(g).column(c).compression
+            for g in range(md.num_row_groups)
+            for c in range(md.num_columns)
+        }
+        out[os.path.relpath(f, root)] = ",".join(sorted(codecs))
+    return out
 
 
 @pytest.mark.slow
@@ -2667,3 +2693,140 @@ def test_side_table_compaction_single_rewrite_on_marker_mismatch(
     assert spark.table(bands_name).count() > 0
     spark.sql(f"DROP TABLE IF EXISTS {bands_name}")
     spark.sql(f"DROP TABLE IF EXISTS {C.winnow_table_name(store)}")
+
+
+def _store_batches():
+    """A 4-doc store batch and a 5-doc follow-up batch holding one copy
+    of each kind of store duplicate (exact, one-token edit, shared
+    25-token passage) plus two fresh docs: the follow-up merge admits
+    exactly {13, 14}."""
+    passage = _words("sharedpassage", 25)
+    store = [(i, _words(f"seed{i}", 30)) for i in range(1, 4)]
+    store.append((4, passage + " " + _words("oldfill", 40)))
+    near = _words("seed2", 29) + " editedtoken"
+    batch = [
+        (10, _words("seed1", 30)),                      # exact
+        (11, near),                                     # near dup
+        (12, passage + " " + _words("newfill", 40)),    # passage
+        (13, _words("fresh13", 30)),
+        (14, _words("fresh14", 30)),
+    ]
+    return store, batch
+
+
+def test_store_writes_are_zstd(spark, tmp_path):
+    """Every file a near-dup merge lands in the store — documents,
+    ``_bands``, ``_winnow``, ``_ingest_history`` — is zstd, whatever the
+    session codec; so are the side tables ``compact_corpus_side_tables``
+    rewrites, at one file per non-empty bucket."""
+    from etl_weather_data_pipeline_spark.streaming import corpus as C
+
+    assert spark.conf.get("spark.sql.parquet.compression.codec") == "snappy"
+    store = str(tmp_path / "corpus")
+    rows, _ = _store_batches()
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    assert C.merge_batch_neardup_into_corpus(
+        df, store, band_buckets=4, passage_min_run=16
+    ) == 4
+    subs = ("", C.BANDS_SUBDIR, C.WINNOW_SUBDIR, C.INGEST_HISTORY_SUBDIR)
+    for sub in subs:
+        codecs = _parquet_codecs(store, sub)
+        assert codecs and set(codecs.values()) == {"ZSTD"}, (sub, codecs)
+
+    rep = C.compact_corpus_side_tables(spark, store, band_buckets=4)
+    for label, sub in (("bands", C.BANDS_SUBDIR), ("winnow", C.WINNOW_SUBDIR)):
+        codecs = _parquet_codecs(store, sub)
+        assert set(codecs.values()) == {"ZSTD"}, (sub, codecs)
+        ids = C._bucket_file_ids(f"{store}/{sub}")
+        assert sorted(ids) == sorted(set(ids)), ids  # one file per bucket
+        assert rep[label]["files_after"] == len(ids)
+    # the rewrite re-creates the catalog tables; later appends into them
+    # write with the table's options, so the codec must be one of them
+    for name in (C.bands_table_name(store), C.winnow_table_name(store)):
+        props = {
+            r["col_name"]: r["data_type"]
+            for r in spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
+        }
+        assert "compression=zstd" in props["Storage Properties"], props
+    spark.sql(f"DROP TABLE IF EXISTS {C.bands_table_name(store)}")
+    spark.sql(f"DROP TABLE IF EXISTS {C.winnow_table_name(store)}")
+
+
+@pytest.mark.slow
+def test_merge_into_snappy_store_admits_same_docs(spark, tmp_path, monkeypatch):
+    """A store written snappy (as stores were before the zstd switch)
+    keeps working: a zstd merge into it admits exactly what the same
+    merge into an all-zstd store admits, and its exact, band and
+    passage probes still find store docs whose rows live only in the
+    old snappy files (every planted duplicate is dropped)."""
+    from etl_weather_data_pipeline_spark.streaming import corpus as C
+
+    rows, batch = _store_batches()
+    admitted = {}
+    for codec in ("snappy", "zstd"):
+        store = str(tmp_path / codec)
+        with monkeypatch.context() as m:
+            if codec == "snappy":  # the session default, set by no option
+                m.setattr(C, "_store_codec", lambda writer: writer)
+            C.merge_batch_neardup_into_corpus(
+                spark.createDataFrame(rows, "doc_id long, text string"),
+                store, band_buckets=4, passage_min_run=16,
+            )
+        if codec == "snappy":
+            # an older store meets this code in a new session: its side
+            # tables re-attach from their files, not from the catalog
+            spark.sql(f"DROP TABLE IF EXISTS {C.bands_table_name(store)}")
+            spark.sql(f"DROP TABLE IF EXISTS {C.winnow_table_name(store)}")
+        old = _parquet_codecs(store)
+        assert set(old.values()) == {codec.upper()}
+        assert C.merge_batch_neardup_into_corpus(
+            spark.createDataFrame(batch, "doc_id long, text string"),
+            store, band_buckets=4, passage_min_run=16,
+        ) == 2
+        admitted[codec] = {
+            r["doc_id"] for r in spark.read.parquet(store).collect()
+        }
+        new = _parquet_codecs(store)
+        # the old files are untouched; every new file is zstd
+        assert {f: new[f] for f in old} == old
+        assert {new[f] for f in set(new) - set(old)} == {"ZSTD"}, new
+        spark.sql(f"DROP TABLE IF EXISTS {C.bands_table_name(store)}")
+        spark.sql(f"DROP TABLE IF EXISTS {C.winnow_table_name(store)}")
+    assert admitted["snappy"] == admitted["zstd"] == {1, 2, 3, 4, 13, 14}
+
+
+def test_neardup_merge_store_append_sees_no_cached_plan(
+    spark, tmp_path, monkeypatch
+):
+    """Recache-by-path guard: every cached frame of a merge — including
+    the stage-1 flagged batch, whose hit join scans the store — is
+    released before the documents append to the store path, so the
+    write cannot rebuild a cache that reads that path."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from etl_weather_data_pipeline_spark.streaming import corpus as C
+
+    store = str(tmp_path / "corpus")
+    rows, batch = _store_batches()
+    C.merge_batch_neardup_into_corpus(
+        spark.createDataFrame(rows, "doc_id long, text string"),
+        store, band_buckets=4,
+    )
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    n_cached = cm.cachedData().size()  # other tests' caches, if any
+    at_append = []
+    real = DataFrameWriter.parquet
+
+    def spy(self, path, *a, **kw):
+        if path == store:
+            at_append.append(cm.cachedData().size())
+        return real(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    assert C.merge_batch_neardup_into_corpus(
+        spark.createDataFrame(batch, "doc_id long, text string"),
+        store, band_buckets=4,
+    ) > 0
+    monkeypatch.undo()
+    assert at_append == [n_cached], (at_append, n_cached)
+    spark.sql(f"DROP TABLE IF EXISTS {C.bands_table_name(store)}")
