@@ -51,8 +51,10 @@ DOC_STREAM_SCHEMA = (
 #: Parquet codec of every corpus-store write. The store's bulk is its
 #: similarity-join indexes (``_winnow`` alone is ~60% of the bytes),
 #: narrow integer/string key columns on which zstd writes about a third
-#: fewer bytes than snappy, at no measured merge-time cost. Set per write,
-#: never session-wide, so the weather warehouse keeps the session codec.
+#: fewer bytes than snappy. The price is executor time: on a 500-doc store
+#: taking 250-doc batches, a merge ran about 8% longer (4-vCPU host). Set
+#: per write, never session-wide, so the weather warehouse keeps the
+#: session codec.
 #: Reads need nothing: the codec is recorded per column chunk, so a store
 #: holding older snappy files reads (and probes) them alongside.
 STORE_CODEC = "zstd"
