@@ -1551,6 +1551,92 @@ def test_funnel_merge_action_discipline(spark, tmp_path, monkeypatch):
     assert len(persists) == 10, [p.columns for p in persists]
 
 
+def _judge_store(spark, store):
+    """A 4-doc store with ``_bands`` and ``_winnow`` and the 5-doc
+    follow-up batch of `_store_batches` (the judge keeps {13, 14})."""
+    from etl_weather_data_pipeline_spark.streaming import corpus as C
+
+    rows, batch = _store_batches()
+    assert C.merge_batch_neardup_into_corpus(
+        spark.createDataFrame(rows, "doc_id long, text string"),
+        store, band_buckets=4, passage_min_run=16,
+    ) == 4
+    return spark.createDataFrame(batch, "doc_id long, text string")
+
+
+def test_judge_action_discipline(spark, tmp_path, monkeypatch):
+    """The read-only judge's shape with the passage stage on, pinned
+    per call: 2 localCheckpoints (the stage-2 cut and the survivor
+    set), 10 persists (flagged batch, fresh, bands table, vs-store band
+    candidates, verify token sets, and the passage stage's five) and
+    64 Spark jobs, counted as the DAG scheduler's job-id delta."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from etl_weather_data_pipeline_spark.streaming import corpus as C
+
+    store = str(tmp_path / "corpus")
+    batch = _judge_store(spark, store)
+    ckpts, persists = [], []
+    orig_ck, orig_p = DataFrame.localCheckpoint, DataFrame.persist
+
+    def spy_ck(self, *a, **kw):
+        ckpts.append(self)
+        return orig_ck(self, *a, **kw)
+
+    def spy_p(self, *a, **kw):
+        persists.append(self)
+        return orig_p(self, *a, **kw)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy_ck)
+    monkeypatch.setattr(DataFrame, "persist", spy_p)
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = sched.nextJobId()
+    rep = C.judge_batch_against_store(
+        batch, store, band_buckets=4, passage_min_run=16
+    )
+    jobs = sched.nextJobId() - j0
+    monkeypatch.undo()
+    assert rep["n_survivors"] == 2
+    assert len(ckpts) == 2, [c.columns for c in ckpts]
+    assert len(persists) == 10, [p.columns for p in persists]
+    assert jobs == 64, jobs
+    spark.sql(f"DROP TABLE IF EXISTS {C.bands_table_name(store)}")
+    spark.sql(f"DROP TABLE IF EXISTS {C.winnow_table_name(store)}")
+
+
+@pytest.mark.parametrize("fail", [False, True], ids=["returns", "raises"])
+def test_judge_releases_every_cache(spark, tmp_path, monkeypatch, fail):
+    """No cached plan outlives a judge call, whether it returns or
+    raises inside the passage stage after that stage has persisted its
+    frames."""
+    from etl_weather_data_pipeline_spark.streaming import corpus as C
+
+    store = str(tmp_path / "corpus")
+    batch = _judge_store(spark, store)
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    n_cached = cm.cachedData().size()
+    if fail:
+        real = C._passage_stage_drops
+
+        def raising(*a, **kw):
+            real(*a, **kw)
+            raise RuntimeError("stage 3 failed")
+
+        monkeypatch.setattr(C, "_passage_stage_drops", raising)
+        with pytest.raises(RuntimeError, match="stage 3 failed"):
+            C.judge_batch_against_store(
+                batch, store, band_buckets=4, passage_min_run=16
+            )
+    else:
+        rep = C.judge_batch_against_store(
+            batch, store, band_buckets=4, passage_min_run=16
+        )
+        assert rep["n_survivors"] == 2
+    assert cm.cachedData().size() == n_cached
+    spark.sql(f"DROP TABLE IF EXISTS {C.bands_table_name(store)}")
+    spark.sql(f"DROP TABLE IF EXISTS {C.winnow_table_name(store)}")
+
+
 @pytest.mark.slow
 def test_semantic_stage_drops_embedding_neardups(spark, tmp_path):
     """Stage 4 (opt-in embedding_col): near-identical EMBEDDINGS are
