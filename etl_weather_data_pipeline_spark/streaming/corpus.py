@@ -360,13 +360,27 @@ def _append_side_bucketed(
     """Append rows to a BUCKETED side table (creates the external table
     on first use). The repartition aligns tasks with the bucket hash
     (same Murmur3), so each append writes at most ``n_buckets`` files
-    instead of tasks x buckets."""
+    instead of tasks x buckets.
+
+    A table whose dir already records ``n_buckets`` is appended with
+    ``insertInto`` (positional: ``spec.cols`` is the DDL order).
+    ``saveAsTable``'s append re-resolves the location as a path, finds
+    it hidden (an underscore dir) and logs ``WARN DataSource: All paths
+    were ignored`` on every merge; the insert resolves the catalog
+    table instead and writes with its bucket spec and codec. Any other
+    case keeps ``saveAsTable``: it creates the table, or raises on a
+    bucket count that differs from the catalog table's."""
+    aligned = rows.select(*spec.cols).repartition(
+        n_buckets, *[F.col(c) for c in spec.bucket_cols]
+    )
+    if (
+        _read_bucket_marker(loc) == n_buckets
+        and rows.sparkSession.catalog.tableExists(name)
+    ):
+        aligned.write.insertInto(name)
+        return
     (
-        _store_codec(
-            rows.select(*spec.cols)
-            .repartition(n_buckets, *[F.col(c) for c in spec.bucket_cols])
-            .write
-        )
+        _store_codec(aligned.write)
         .mode("append")
         .format("parquet")
         .bucketBy(n_buckets, *spec.bucket_cols)
